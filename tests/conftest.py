@@ -48,11 +48,6 @@ _SLOW_NODE_IDS = {
     "test_dedup_round8.py::test_rebuild_neardup_index_same_k_is_bit_identical",  # 10s
     "test_dedup_round8.py::test_rebuild_embdedup_index_rekeys_and_continues",  # 10s
     "test_dedup_round9.py::test_banded_auto_gate_fires_and_matches_pinned_center",  # 15s
-    "test_metrics.py::test_metrics_parquet_roundtrip",  # 40s
-    "test_metrics.py::test_funnel_and_bottleneck_reports",  # 9s
-    "test_metrics.py::test_html_report_expectations_section",  # 8s
-    "test_metrics.py::test_task_latency_distributions_populate_columns",  # 7s
-    "test_metrics.py::test_html_report_render_and_cli",  # 7s
     "test_null_robustness.py::test_round6_orders_queries_null_parity[ts_holt_linear]",  # 18s
     "test_null_robustness.py::test_vector_queries_null_parity[v_hyperplane_recall]",  # 13s
     "test_null_robustness.py::test_round6_orders_queries_null_parity[x_join_cardinality_estimate]",  # 12s

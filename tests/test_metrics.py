@@ -3,6 +3,11 @@
 
 from __future__ import annotations
 
+import os
+import shutil
+import time
+from pathlib import Path
+
 from webscale_multimodal_datapipeline_spark import metrics as M
 from webscale_multimodal_datapipeline_spark.compiler import compile_pipeline
 
@@ -166,3 +171,109 @@ def test_task_latency_distributions_populate_columns(spark, sf_dir):
 
     null_row = M.operator_metrics_df(res.metrics, latencies=None).first()
     assert null_row.p50_latency is None
+
+
+# Read-back schema of each table, as the Spark-written tables had it.
+TABLE_SCHEMAS = {
+    "operators": (
+        "struct<run_id:string,stage_name:string,operator_name:string,worker_id:int,"
+        "timestamp:timestamp,input_records:bigint,output_records:bigint,pass_rate:double,"
+        "total_time:double,avg_latency:double,min_latency:double,max_latency:double,"
+        "p50_latency:double,p95_latency:double,p99_latency:double,throughput:double,"
+        "error_count:bigint,custom_metrics:string>"
+    ),
+    "stages": (
+        "struct<run_id:string,stage_name:string,num_operators:bigint,total_time:double,"
+        "min_throughput:double,max_throughput:double,avg_throughput:double,"
+        "error_count:bigint,input_records:bigint,output_records:bigint,pass_rate:double>"
+    ),
+    "runs": (
+        "struct<run_id:string,num_stages:bigint,total_input_records:bigint,"
+        "total_output_records:bigint,duration:double,avg_throughput:double,"
+        "total_errors:bigint,overall_pass_rate:double,config:string>"
+    ),
+}
+
+# One run of CFG whose tables Spark's own parquet writer appended (the
+# metrics writer's earlier implementation): operators in two part files.
+SPARK_WRITTEN = Path(__file__).parent / "fixtures" / "metrics_parent"
+
+
+def test_metrics_tables_schema_and_append_to_spark_written_tables(spark, sf_dir, tmp_path):
+    res = compile_pipeline(CFG).run(spark, sf_dir)
+    res.output.count()
+    shutil.copytree(SPARK_WRITTEN, tmp_path / "mixed")
+    for out in ("fresh", "mixed"):
+        M.write_metrics(res.metrics, str(tmp_path / out))
+    expected_rows = {"operators": 3, "stages": 2, "runs": 1}
+    for table, schema in TABLE_SCHEMAS.items():
+        fresh = tmp_path / "fresh" / table
+        # one snappy part file per append, no temp file left behind
+        names = os.listdir(fresh)
+        assert len(names) == 1 and names[0].startswith("part-"), names
+        assert names[0].endswith(".snappy.parquet"), names
+        assert spark.read.parquet(str(fresh)).schema.simpleString() == schema
+        mixed = spark.read.parquet(str(tmp_path / "mixed" / table))
+        assert mixed.schema.simpleString() == schema
+        rows = mixed.collect()
+        assert len(rows) == 2 * expected_rows[table]
+        assert len({r.run_id for r in rows}) == 2
+
+
+def test_stage_and_run_rollups_take_first_input_and_last_output(spark, sf_dir, tmp_path):
+    res = compile_pipeline(CFG).run(spark, sf_dir)
+    res.output.count()
+    M.write_metrics(res.metrics, str(tmp_path))
+    ops = {r.operator_name: r for r in spark.read.parquet(str(tmp_path / "operators")).collect()}
+    stages = {r.stage_name: r for r in spark.read.parquet(str(tmp_path / "stages")).collect()}
+    run = spark.read.parquet(str(tmp_path / "runs")).first()
+    # filter -> refiner: the stage's input is the filter's input, not the
+    # refiner's (the two differ), and its output is the refiner's output
+    assert ops["text_length_filter"].input_records != ops["text_stats_refiner"].input_records
+    assert stages["curate"].input_records == ops["text_length_filter"].input_records == 500
+    assert stages["curate"].output_records == ops["text_stats_refiner"].output_records
+    assert stages["curate"].pass_rate == ops["text_stats_refiner"].output_records / 500
+    assert run.total_input_records == stages["source"].input_records == 500
+    assert run.total_output_records == stages["curate"].output_records
+    # the rollups are plain functions of the operator rows, in plan order
+    rows = M.operator_rows(res.metrics, latencies=None)
+    assert [r.operator_name for r in rows] == ["source", "text_length_filter", "text_stats_refiner"]
+    assert [s.stage_name for s in M.stage_rollup(rows)] == ["source", "curate"]
+
+
+def test_task_latencies_scoped_to_the_run(spark, tmp_path):
+    """A slow task of an earlier run must not show in a later run's
+    latency columns: only stages submitted since the run started count."""
+    from pyspark.sql import functions as F
+
+    from webscale_multimodal_datapipeline_spark.compiler import (
+        Pipeline,
+        PipelineConfig,
+        StageConfig,
+    )
+    from webscale_multimodal_datapipeline_spark.operators.base import FilterOperator
+
+    slow_s = 2.0
+
+    @F.udf("boolean")
+    def keep(x):
+        if x == 0:  # one slow task
+            time.sleep(slow_s)
+        return True
+
+    src = str(tmp_path / "in")
+    spark.range(8).write.parquet(src)
+
+    def run(predicate):
+        cfg = PipelineConfig(
+            loader={"path": src},
+            stages=[StageConfig("s", [FilterOperator("op", predicate, requires={"id"})])],
+        )
+        res = Pipeline(cfg).run(spark)
+        res.output.count()
+        return M.operator_rows(res.metrics)[-1]
+
+    slow = run(keep("id"))
+    assert slow.max_latency >= slow_s
+    fast = run(F.col("id") >= 0)
+    assert fast.max_latency is not None and fast.max_latency < slow_s

@@ -2,6 +2,16 @@
 ``cli.py:41-209``) re-expressed: parse YAML → compile → run → print the
 funnel stats (``cli.py:104-150`` stats print).
 
+``run`` executes the pipeline plan exactly once. With a
+``data_writer.path`` that execution is the write: the output row count
+(``n_out``) is the write's own observation of the DataFrame it wrote, and
+every operator count rides the same execution. Without a writer the one
+execution is a ``count()`` of the output. The funnel print, ``n_out``,
+``--metrics-dir`` and ``--report`` all use one harvest of those counts,
+and the metrics tables are written from the driver, so nothing after the
+run starts another Spark job (``--show-rejected`` and ``--report``'s
+funnel queries aside).
+
 Usage::
 
     python -m webscale_multimodal_datapipeline_spark.cli run -c examples/curate_documents.yaml \
@@ -17,6 +27,7 @@ import time
 
 
 def cmd_run(args: argparse.Namespace) -> int:
+    from webscale_multimodal_datapipeline_spark import metrics as M
     from webscale_multimodal_datapipeline_spark.compiler import compile_pipeline
     from webscale_multimodal_datapipeline_spark.session import get_spark
 
@@ -24,11 +35,11 @@ def cmd_run(args: argparse.Namespace) -> int:
     pipe = compile_pipeline(open(args.config).read())
     t0 = time.time()
     result = pipe.run(spark, args.sf_dir)
-    n_out = result.output.count()
+    n_out = result.metrics.output_records()
+    metrics = result.metrics.harvest()
     wall = time.time() - t0
 
     print(f"pipeline: {args.config}")
-    metrics = result.metrics.harvest()
     n_in = metrics[0].input_records if metrics else n_out
     for m in metrics:
         bar = "#" * int(m.pass_rate * 30)
@@ -44,16 +55,15 @@ def cmd_run(args: argparse.Namespace) -> int:
         f"  total: {n_in} -> {n_out} ({(n_out / n_in if n_in else 1.0):.1%}) "
         f"in {wall:.2f}s ({(n_in / wall if wall > 0 else 0):,.0f} rec/s)"
     )
+    if args.metrics_dir or args.report:
+        operators = M.operator_rows(result.metrics, harvested=metrics)
     if args.metrics_dir:
-        from webscale_multimodal_datapipeline_spark.metrics import write_metrics
-
-        write_metrics(result.metrics, args.metrics_dir)
+        M.write_metrics(result.metrics, args.metrics_dir, operators=operators)
         print(f"  metrics -> {args.metrics_dir}/(operators|stages|runs)")
-    if getattr(args, "report", None):
-        from webscale_multimodal_datapipeline_spark.metrics import operator_metrics_df
+    if args.report:
         from webscale_multimodal_datapipeline_spark.report import write_html_report
 
-        write_html_report(operator_metrics_df(result.metrics), args.report)
+        write_html_report(spark.createDataFrame(operators, M.OPERATORS_DDL), args.report)
         print(f"  report -> {args.report}")
     return 0
 
@@ -89,7 +99,11 @@ def main(argv: list[str] | None = None) -> int:
         sp = sub.add_parser(name)
         sp.add_argument("-c", "--config", required=True)
         sp.add_argument("--sf-dir", default="/root/testdata/sf0.001")
-        sp.add_argument("--metrics-dir", default=None)
+        sp.add_argument(
+            "--metrics-dir",
+            default=None,
+            help="append the run/stage/operator metrics parquet here (a local path)",
+        )
         sp.add_argument("--show-rejected", action="store_true")
         sp.add_argument("--report", default=None, help="write HTML report here")
         sp.set_defaults(fn=fn)

@@ -224,10 +224,57 @@ def _build_expectations(specs: list[dict[str, Any]]):
     return all_exps, enforced
 
 
+def _observed_count(obs: Any, df: DataFrame) -> tuple[int, str]:
+    """(count, provenance) of one observation.
+
+    Observations are read through the JVM row (PySpark's ``obs.get``
+    asserts in ``toPyRow`` on a schemaless empty row). An observation
+    CAN legitimately come back as an empty map: a query stage that runs
+    zero tasks (runtime-pruned to nothing on degenerate input) never
+    updates the CollectMetrics accumulator. That is an artifact of the
+    adaptive physical plan, not a statement about the data — so fall back
+    to counting the instrumented checkpoint directly (one extra bounded
+    action, only on the anomaly path; -1 remains only for a genuinely
+    unrunnable count)."""
+    try:
+        # _jo is the classic-PySpark JVM handle; absent under Spark
+        # Connect (ADVICE r6 #2). Read through the JVM's getRowOrEmpty —
+        # the ONLY non-blocking accessor: both the JVM get()/getRow() and
+        # PySpark's obs.get AWAIT the observation's future
+        # (Observation.scala awaitResult), so calling them on a plan whose
+        # action never ran hangs the harvest forever (verified; a try
+        # can't catch a block). None = not yet completed; Some(empty row)
+        # = completed but the observe stage ran zero tasks (runtime-pruned
+        # input) — both fall through to the recount. Under Connect there
+        # is no non-blocking surface at all, so the recount path is the
+        # read.
+        jo = getattr(obs, "_jo", None)
+        if jo is not None:
+            opt = jo.getRowOrEmpty()
+            if opt.isDefined() and opt.get().size() > 0:
+                return int(obs.get["n"]), "observed"  # row available: no await
+    except Exception:
+        pass
+    # Recount fallback re-executes the instrumented plan — a
+    # non-deterministic or since-mutated source can report a count that
+    # differs from what actually flowed, so the provenance is recorded on
+    # the metric (ADVICE r6 #2).
+    try:
+        return df.count(), "recount"
+    except Exception:
+        return -1, "unavailable"
+
+
 class MetricsCollector:
     """Per-operator in/out counts via ``df.observe`` (reference A1/A2:
     ``framework/operator.py:119-184``, ``executor.py:760-846``) — counters
-    ride the normal execution, no extra pass over the data."""
+    ride the normal execution, no extra pass over the data.
+
+    One execution per run: ``Pipeline.run`` also observes the DataFrame it
+    outputs (after any enforced expectation), so ``output_records()`` is
+    the written row count taken from the write's own execution, not a
+    recount. That output observation is not an operator: ``harvest()``
+    and the metrics tables never show it."""
 
     def __init__(self, spark: SparkSession, run_id: str):
         from pyspark.sql import Observation
@@ -237,63 +284,41 @@ class MetricsCollector:
         self.started = time.time()
         # (stage, operator, Observation, instrumented checkpoint df)
         self._obs: list[tuple[str, str, Any, DataFrame]] = []
+        # (Observation, instrumented output df) once Pipeline.run set it
+        self._output: tuple[Any, DataFrame] | None = None
         self._Observation = Observation
 
+    def _observe(self, df: DataFrame, name: str) -> tuple[Any, DataFrame]:
+        obs = self._Observation(f"{name}.{uuid.uuid4().hex[:6]}")
+        return obs, df.observe(obs, F.count(F.lit(1)).alias("n"))
+
     def instrument(self, df: DataFrame, stage: str, operator: str) -> DataFrame:
-        obs = self._Observation(f"{stage}.{operator}.{uuid.uuid4().hex[:6]}")
-        out = df.observe(obs, F.count(F.lit(1)).alias("n"))
+        obs, out = self._observe(df, f"{stage}.{operator}")
         self._obs.append((stage, operator, obs, out))
         return out
 
+    def instrument_output(self, df: DataFrame) -> DataFrame:
+        """Observe the DataFrame the run outputs — the one its writer
+        writes. Not an operator row."""
+        self._output = self._observe(df, "output")
+        return self._output[1]
+
+    def output_records(self) -> int:
+        """Rows in the run's output. After a writer ran, this is the
+        write's own observation (no job). When nothing has executed the
+        output yet (no ``data_writer.path``), the fallback ``count()`` is
+        the run's one execution, and it fills every operator observation
+        on the way, so a ``harvest()`` after it needs no job either."""
+        if self._output is None:
+            raise ValueError("output not instrumented (run with observe_metrics=True)")
+        return _observed_count(*self._output)[0]
+
     def harvest(self) -> list[OperatorMetric]:
         """Call after an action has run on the instrumented DataFrame.
-
-        Observations are read through the JVM row (PySpark's ``obs.get``
-        asserts in ``toPyRow`` on a schemaless empty row). An observation
-        CAN legitimately come back as an empty map: a query stage that
-        runs zero tasks (runtime-pruned to nothing on degenerate input)
-        never updates the CollectMetrics accumulator. That is an artifact
-        of the adaptive physical plan, not a statement about the data —
-        so fall back to counting the instrumented checkpoint directly
-        (one extra bounded action, only on the anomaly path; -1 remains
-        only for a genuinely unrunnable count)."""
+        Each count is read from its observation; see ``_observed_count``
+        for the recount fallback and its provenance."""
+        counts = [(stage, op, *_observed_count(obs, df)) for stage, op, obs, df in self._obs]
         rows: list[OperatorMetric] = []
-        counts: list[tuple[str, str, int, str]] = []
-        for stage, op, obs, df in self._obs:
-            n = None
-            try:
-                # _jo is the classic-PySpark JVM handle; absent under
-                # Spark Connect (ADVICE r6 #2). Read through the JVM's
-                # getRowOrEmpty — the ONLY non-blocking accessor: both
-                # the JVM get()/getRow() and PySpark's obs.get AWAIT the
-                # observation's future (Observation.scala awaitResult),
-                # so calling them on a plan whose action never ran hangs
-                # the harvest forever (verified; a try can't catch a
-                # block). None = not yet completed; Some(empty row) =
-                # completed but the observe stage ran zero tasks
-                # (runtime-pruned input) — both fall through to the
-                # recount. Under Connect there is no non-blocking
-                # surface at all, so the recount path is the read.
-                jo = getattr(obs, "_jo", None)
-                if jo is not None:
-                    opt = jo.getRowOrEmpty()
-                    if opt.isDefined() and opt.get().size() > 0:
-                        n = int(obs.get["n"])  # row available: no await
-            except Exception:
-                n = None
-            source = "observed"
-            if n is None:
-                # Recount fallback re-executes the instrumented plan — a
-                # non-deterministic or since-mutated source can report a
-                # count that differs from what actually flowed, so the
-                # provenance is recorded on the metric (ADVICE r6 #2).
-                try:
-                    n = df.count()
-                    source = "recount"
-                except Exception:
-                    n = -1
-                    source = "unavailable"
-            counts.append((stage, op, n, source))
         for i, (stage, op, n_out, source) in enumerate(counts):
             n_in = counts[i - 1][2] if i > 0 else n_out
             rows.append(
@@ -308,31 +333,6 @@ class MetricsCollector:
                 )
             )
         return rows
-
-    def to_dataframe(self) -> DataFrame:
-        """Metrics as a DataFrame in the reference's operator-metrics
-        parquet shape (``framework/metrics/writer.py:28-54``)."""
-        rows = self.harvest()
-        total_time = time.time() - self.started
-        data = [
-            (
-                m.run_id,
-                m.stage_name,
-                m.operator_name,
-                m.input_records,
-                m.output_records,
-                float(m.pass_rate),
-                float(total_time),
-                (m.output_records / total_time) if total_time > 0 else 0.0,
-            )
-            for m in rows
-        ]
-        return self.spark.createDataFrame(
-            data,
-            "run_id string, stage_name string, operator_name string, "
-            "input_records long, output_records long, pass_rate double, "
-            "total_time double, throughput double",
-        )
 
 
 class Pipeline:
@@ -400,6 +400,9 @@ class Pipeline:
             if enforced:
                 df = Q.enforce(df, enforced)
                 enforced_names = tuple(e.name for e in enforced)
+        if observe_metrics:
+            # the writer's own execution fills this: n_out needs no recount
+            df = metrics.instrument_output(df)
 
         wr = self.config.writer
         if wr.get("path"):

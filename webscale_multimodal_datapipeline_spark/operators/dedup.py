@@ -238,8 +238,9 @@ def minhash_lsh_dup_map(
     # The pair SET is bit-identical (oracle-pinned); the only cost is S×
     # the banded table's (id, band) rows through the exchange — metadata,
     # not payload (§8 lightweight-proxy rule; the shingle hashes join
-    # later, after candidate dedup). NULL ids produce a NULL salt and no
-    # pairs, same as the previous id-comparison join. ``S`` is
+    # later, after candidate dedup). NULL ids still get a salt
+    # (xxhash64(NULL) is the seed, not NULL); the ``l.id > r.id`` join
+    # predicate is what gives them no pairs, as in the unsalted join. ``S`` is
     # env-parameterised with a scale-neutral default; 1 restores the
     # unsalted join for A/B.
     salt_n = int(os.environ.get("SPARK_GRAFT_LSH_BAND_SALT", "8"))

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from webscale_multimodal_datapipeline_spark.catalog import load_table
 from webscale_multimodal_datapipeline_spark.compiler import compile_pipeline
+from webscale_multimodal_datapipeline_spark.metrics import operator_metrics_df
 from webscale_multimodal_datapipeline_spark.plans import oracle_fragments as OQ
 from webscale_multimodal_datapipeline_spark.functions import stats as ST
 
@@ -93,7 +94,7 @@ def p_pipeline_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     funnel counters, ``framework/metrics/writer.py:28-54``)."""
     result = compile_pipeline(PIPELINE_CFG).run(spark, sf_dir)
     result.output.count()  # fire the action that populates observations
-    mdf = result.metrics.to_dataframe()
+    mdf = operator_metrics_df(result.metrics, latencies=None)
     return mdf.select(
         "stage_name", "operator_name", "input_records", "output_records",
         F.round("pass_rate", 6).alias("pass_rate"),

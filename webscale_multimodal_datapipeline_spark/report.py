@@ -3,10 +3,10 @@
 The reference emits a plotly HTML report (funnel, Sankey, timeline,
 bottleneck, latency heatmap — ``framework/metrics/reporter.py:126-1314``).
 Here the same report sections are rendered as dependency-free static HTML:
-the *analytics* are the Spark SQL aggregates in ``metrics.py`` (funnel /
-bottleneck / stage rollups); only their tiny driver-side results are
-formatted. Pass-rate "charts" are inline-CSS bars, so the file opens
-anywhere with no JS.
+the *analytics* are the aggregates in ``metrics.py`` (funnel / bottleneck
+in Spark SQL; the stage / run rollups the metrics writer also uses); only
+their tiny driver-side results are formatted. Pass-rate "charts" are
+inline-CSS bars, so the file opens anywhere with no JS.
 
 Collecting here is correct, not a hot-path anti-pattern: the inputs are
 per-(stage, operator) aggregate rows — dozens of rows regardless of how
@@ -24,8 +24,8 @@ from pyspark.sql import functions as F
 from webscale_multimodal_datapipeline_spark.metrics import (
     bottleneck_report,
     funnel_report,
-    run_metrics_df,
-    stage_metrics_df,
+    run_rollup,
+    stage_rollup,
 )
 
 _CSS = """
@@ -241,11 +241,10 @@ def render_html_report(
     the output), the rest as ``report`` — the warn/drop split the
     rejected-samples section draws for operators (reference
     ``reporter.py`` rejected-shape)."""
-    stages = stage_metrics_df(operators)
-    runs = run_metrics_df(operators, stages).collect()
+    stage_rows = stage_rollup(operators.collect())
+    runs = run_rollup(stage_rows)
     funnel = funnel_report(operators).orderBy("first_seen", "stage_name").collect()
     bottleneck = bottleneck_report(operators).collect()
-    stage_rows = stages.orderBy("stage_name").collect()
 
     parts = [
         "<!DOCTYPE html><html><head><meta charset='utf-8'>",
